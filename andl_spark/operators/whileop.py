@@ -33,6 +33,11 @@ def _run(
     max_iterations: int,
     checkpoint_every: int = 1,  # kept for API stability; deltas always checkpoint
 ) -> DataFrame:
+    """Semi-naive loop shared by the frontier fixpoints. Contract:
+    ``produce`` must map an empty frontier to an empty relation
+    (produce(∅) = ∅) — the stride-2 emptiness check below applies it to
+    a possibly-empty delta and stops only when the second delta is
+    empty (pinned in tests/test_operators.py)."""
     # Invariant: every delta is a materialized localCheckpoint, so
     # `total` is always a FLAT union of materialized roots — lineage
     # depth stays O(1) regardless of recursion depth, and nothing is
@@ -122,7 +127,8 @@ def fixpoint(
 ) -> DataFrame:
     """Smallest superset of ``seed`` closed under ``step`` (set
     semantics). ``step`` takes the current frontier and returns
-    candidate tuples with the same heading (column order normalized)."""
+    candidate tuples with the same heading (column order normalized);
+    it must return no tuples for an empty frontier (see ``_run``)."""
     cols = seed.columns
     return _run(
         seed.dropDuplicates(),

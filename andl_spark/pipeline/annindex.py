@@ -52,6 +52,7 @@ half of the 100 TB story.
 from __future__ import annotations
 
 import json
+from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -118,8 +119,9 @@ def _cell_shape(df: DataFrame, rows_per_task: int = SALT_ROWS_PER_TASK,
     """Shuffle shape for the cell-partitioned writes, with HOT-CELL
     salting: count rows per cell (one map-side-combined aggregation —
     on a parquet-backed frame it reads only the list_id partition
-    column; on a freshly-assigned frame it costs one extra assignment
-    pass, the same bounded class as the calibration scan), then give
+    column; a freshly-assigned frame is assigned once for this count
+    and again for the write, unless the caller checkpoints it first,
+    as ivf_index_append does with its batch), then give
     cell i ``ceil(rows_i / rows_per_task)`` salt buckets keyed by
     ``xxhash64(vec_id)``. Uniform corpora keep width 1 everywhere —
     the one-file-per-cell invariant the r8b pins assert — while a hot
@@ -656,6 +658,9 @@ def _append_loop(batch, path, data_root, batch_id, id_col, vec_col,
             # encode against the STORED codebooks — the same frozen-
             # quantizer contract appends already follow for centroids
             assigned = _pq_augment(assigned, meta)
+        # the batch is read and assigned ONCE: _cell_shape's per-cell
+        # count and the write both read this checkpoint
+        assigned = assigned.localCheckpoint()
         (
             _cell_shape(assigned, rows_per_task)
             .withColumn("_batch_id", F.lit(batch_id))
@@ -1189,24 +1194,45 @@ def topk_ivf_index(
     # 20.2 → 13.9 s on the 20M serve (SCALE_r09 §2)
     from .simsearch import _score_exprs
 
-    _norm, _cos = _score_exprs(int(meta.get("dim") or 0))
+    dim = int(meta.get("dim") or 0)
+    _norm, _cos = _score_exprs(dim)
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"),
         _norm(vec_col).alias("qn"),
-    ).withColumn("probe", probe_expr).localCheckpoint()  # probe lists computed ONCE: reused for the
-    # driver-side partition-filter collect AND the probe join
-    cells = sorted({c for r in q.select(
-        F.explode("probe").alias("c")).distinct().collect()
-        for c in [r["c"]] if c is not None})
+    ).withColumn("probe", probe_expr).localCheckpoint()  # probes ONCE
     pq = meta.get("pq")
     if use_pq is None:
         use_pq = pq is not None  # a PQ-built index defaults to ADC
+    if use_pq and pq is None:
+        raise ValueError(
+            "topk_ivf_index(use_pq=True): this index stores no PQ "
+            "codes — build with build_ivf_index(pq_m=...)")
+    # ONE bounded collect of the checkpoint serves the partition-filter
+    # cells, the shared-path estimates and the shared/PQ broadcast. It
+    # stops past the most rows that path could broadcast: the query
+    # bound, and for the shared path also the rows whose vectors alone
+    # fill SHARED_MAX_BC_BYTES (every query probes ≥ 1 cell), so a
+    # batch too big for it is never collected whole; such a batch, and
+    # an explicit mode="join", collect just the distinct probed cells.
+    # The checkpoint is already materialised, so coalesce(1) lets one
+    # task read it and take() needs no second, scaled-up job.
+    join_only = mode == "join" and not use_pq
+    cap = SHARED_MAX_QUERIES
+    if not use_pq:
+        cap = min(cap, SHARED_MAX_BC_BYTES // (8 * max(dim, 1)))
+    qrows = [] if join_only else q.coalesce(1).limit(cap + 1).collect()
+    n_q = len(qrows)
+    if join_only or n_q > cap:
+        cells = sorted({c for r in q.select(
+            F.explode("probe").alias("c")).distinct().collect()
+            for c in [r["c"]] if c is not None})
+    else:
+        # probes per cell, None elements included, as explode+groupBy
+        # would count them
+        per_cell = Counter(c for r in qrows for c in (r["probe"] or ()))
+        cells = sorted(c for c in per_cell if c is not None)
     if use_pq:
-        if pq is None:
-            raise ValueError(
-                "topk_ivf_index(use_pq=True): this index stores no PQ "
-                "codes — build with build_ivf_index(pq_m=...)")
-        return _topk_pq(spark, q, data, cells, k, has_tombs, meta,
+        return _topk_pq(spark, q, qrows, data, cells, k, has_tombs, meta,
                         int(rerank) if rerank else max(32, 4 * k))
     if mode is None or mode == "shared":
         # the shared path is bounded by BYTES, not just query count
@@ -1215,27 +1241,25 @@ def topk_ivf_index(
         # gigabytes of broadcast cellmap, and the per-Arrow-chunk
         # score matrix (chunk rows × probing queries × 8) is
         # similarly unbounded by the count alone. Estimate both from
-        # the checkpointed query frame (two tiny aggs) and dispatch
-        # to the join path — or refuse an explicit mode="shared" —
-        # above the bounds.
-        n_q = q.limit(SHARED_MAX_QUERIES + 1).count()
+        # the collected query rows and dispatch to the join path — or
+        # refuse an explicit mode="shared" — above the bounds.
         why = None
         if n_q > SHARED_MAX_QUERIES:
             why = (f"query batch exceeds {SHARED_MAX_QUERIES} — the "
                    "per-cell query matrices are broadcast to every "
                    "task, so an unbounded batch is a driver/executor "
                    "memory hazard")
+        elif n_q > cap:
+            why = (f"estimated broadcast exceeds "
+                   f"{SHARED_MAX_BC_BYTES >> 20} MiB (over {cap} "
+                   f"queries × probes × dim {dim} × 8)")
         else:
-            row = (q.select(F.explode("probe").alias("c"))
-                   .groupBy("c").count()
-                   .agg(F.sum("count").alias("p"),
-                        F.max("count").alias("m")).collect()[0])
-            n_pairs, max_per_cell = int(row["p"] or 0), int(row["m"] or 0)
-            dim = int(meta.get("dim") or 0)
+            # one query vector per probe
+            bc_bytes = sum(per_cell.values()) * dim * 8
             arrow_rows = int(spark.conf.get(
                 "spark.sql.execution.arrow.maxRecordsPerBatch",
                 "10000") or 10000)
-            bc_bytes = n_pairs * dim * 8  # one query vector per probe
+            max_per_cell = max(per_cell.values(), default=0)
             chunk_bytes = max_per_cell * arrow_rows * 8
             if bc_bytes > SHARED_MAX_BC_BYTES:
                 why = (f"estimated broadcast {bc_bytes >> 20} MiB "
@@ -1254,7 +1278,7 @@ def topk_ivf_index(
         if mode is None:
             mode = "shared" if (1 < n_q and why is None) else "join"
     if mode == "shared":
-        return _topk_shared(spark, q, data, cells, k, has_tombs)
+        return _topk_shared(spark, q, qrows, data, cells, k, has_tombs)
     if mode != "join":
         raise ValueError(f"unknown mode {mode!r} (join | shared)")
     c = (
@@ -1307,8 +1331,9 @@ SHARED_MAX_BC_BYTES = 256 << 20
 SHARED_MAX_CHUNK_BYTES = 256 << 20
 
 
-def _topk_shared(spark: SparkSession, q: DataFrame, data: DataFrame,
-                 cells: list, k: int, has_tombs: bool) -> DataFrame:
+def _topk_shared(spark: SparkSession, q: DataFrame, qrows: list,
+                 data: DataFrame, cells: list, k: int,
+                 has_tombs: bool) -> DataFrame:
     """The cell-shared batch serve (see topk_ivf_index mode="shared").
 
     Shape: the probed-cell scan (same PartitionFilters pruning as the
@@ -1319,19 +1344,11 @@ def _topk_shared(spark: SparkSession, q: DataFrame, data: DataFrame,
     chunk under the final (cosine desc, cand_id asc) order — a global
     top-k row is necessarily in its own chunk's top-k under the same
     total order — and the tiny survivor set ranks through the usual
-    window. The query batch rides a broadcast variable keyed by cell,
-    bounded by the same guard as topk_bruteforce: serving batches are
+    window. The query batch (``qrows``, the caller's collected rows of
+    ``q``) rides a broadcast variable keyed by cell, bounded by the
+    caller's SHARED_MAX_QUERIES and byte guards: serving batches are
     small by contract; bulk k-NN goes through the pair operators."""
     import numpy as np
-
-    qrows = q.limit(SHARED_MAX_QUERIES + 1).collect()
-    if len(qrows) > SHARED_MAX_QUERIES:
-        raise ValueError(
-            f"topk_ivf_index(mode='shared'): query batch exceeds "
-            f"{SHARED_MAX_QUERIES} — the per-cell query matrices are "
-            "broadcast to every task, so an unbounded batch is a "
-            "driver/executor memory hazard. Use knn_join for bulk "
-            "corpus-scale top-k.")
 
     percell: dict = {}
     for r in qrows:
@@ -1391,9 +1408,9 @@ def _topk_shared(spark: SparkSession, q: DataFrame, data: DataFrame,
     )
 
 
-def _topk_pq(spark: SparkSession, q: DataFrame, data: DataFrame,
-             cells: list, k: int, has_tombs: bool, meta: dict,
-             rerank: int) -> DataFrame:
+def _topk_pq(spark: SparkSession, q: DataFrame, qrows: list,
+             data: DataFrame, cells: list, k: int, has_tombs: bool,
+             meta: dict, rerank: int) -> DataFrame:
     """ADC + exact-re-rank serve for a PQ-built index (see
     topk_ivf_index's ``use_pq``). Two passes:
 
@@ -1410,15 +1427,15 @@ def _topk_pq(spark: SparkSession, q: DataFrame, data: DataFrame,
        and tie-breaks are exactly the join mode's on the surviving
        candidate set.
 
-    The query batch is broadcast (the serving-path contract, same
-    bound as mode='shared'); zero-norm and tombstoned candidates are
-    unservable as everywhere else."""
+    The query batch (``qrows``, the caller's bounded collect of ``q``)
+    is broadcast (the serving-path contract, same bound as
+    mode='shared'); zero-norm and tombstoned candidates are unservable
+    as everywhere else."""
     import numpy as np
 
     from . import pq as PQ
 
     pqm = meta["pq"]
-    qrows = q.limit(SHARED_MAX_QUERIES + 1).collect()
     if len(qrows) > SHARED_MAX_QUERIES:
         raise ValueError(
             f"topk_ivf_index(use_pq): query batch exceeds "

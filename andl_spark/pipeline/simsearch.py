@@ -201,21 +201,23 @@ def topk_bruteforce(
     cross-product finished, so query sets above ``max_queries`` raise
     instead (use ``topk_lsh`` / ``topk_ivf`` for bulk k-NN; raise the
     cap explicitly if you truly want a bigger exact run)."""
-    n_q = queries.limit(max_queries + 1).count()
-    if n_q > max_queries:
+    _norm, _cos = _score_exprs(dim)  # pass dim= to unroll the scorer
+    # the query side is read ONCE: its projection is checkpointed (at
+    # most max_queries + 1 rows, so an oversized set is never fully
+    # materialised), and both the guard's count and the broadcast read
+    # the checkpoint
+    q = queries.select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"),
+        _norm(vec_col).alias("qn"),
+    ).limit(max_queries + 1).localCheckpoint()
+    if q.count() > max_queries:
         raise ValueError(
             f"topk_bruteforce: query set exceeds max_queries={max_queries} "
             "(exact brute force broadcasts the queries and scores "
             "|queries| x |corpus| pairs). Use topk_lsh/topk_ivf for bulk "
             "k-NN, or pass a larger max_queries deliberately."
         )
-    _norm, _cos = _score_exprs(dim)  # pass dim= to unroll the scorer
-    q = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"),
-            _norm(vec_col).alias("qn"),
-        )
-    )
+    q = F.broadcast(q)
     c = corpus.select(
         F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cvec"),
         _norm(vec_col).alias("cn"),

@@ -4,6 +4,9 @@ calibration stored as the index's default operating point, and the
 whole maintenance plane (atomic generation flips, compaction,
 carry-over) inherited from the streaming near-dup index protocol."""
 
+import uuid
+from contextlib import contextmanager
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -1701,3 +1704,83 @@ def test_pq_approx_scan_never_reads_embeddings(spark, emb, tmp_path):
     for s in code_scans:
         head = s[:2000]
         assert "embedding" not in head.split("PushedFilters")[0], head
+
+
+# ---------------------------------------------------------------------
+# build-time job budget: each ANN call reads its query batch once
+# ---------------------------------------------------------------------
+@contextmanager
+def _jobs_fired(spark):
+    """Ids of the Spark jobs fired inside the block (a job group read
+    back through statusTracker once the listener bus drains)."""
+    sc = spark.sparkContext
+    group = f"job-budget-{uuid.uuid4().hex}"
+    jobs: list = []
+    sc.setJobGroup(group, "job budget")
+    try:
+        yield jobs
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _python_batch(spark, emb, n, id_offset=0):
+    """``n`` corpus vectors rebuilt as a Python-built frame, plus an
+    accumulator counting how many rows Spark read from it."""
+    rows = [(int(r["vec_id"]) + id_offset, list(r["embedding"]))
+            for r in emb.orderBy("vec_id").limit(n).collect()]
+    reads = spark.sparkContext.accumulator(0)
+
+    def _count(row):
+        reads.add(1)
+        return row
+
+    rdd = spark.sparkContext.parallelize(rows, 2).map(_count)
+    schema = emb.select("vec_id", "embedding").schema
+    return spark.createDataFrame(rdd, schema), reads
+
+
+def test_probe_build_job_budget(spark, emb, tmp_path):
+    """A 10-query topk_ivf_index on the shared path fires at most 3
+    jobs while it builds its plan: the probe checkpoint and one
+    bounded collect, which serves the cell set, the dispatch estimates
+    and the broadcast, plus the parquet schema read of a snapshot
+    reopened after a write. The batch itself is read once."""
+    path = str(tmp_path / "ivf")
+    AX.build_ivf_index(emb.filter(F.col("vec_id") >= 40), path, nlist=8)
+    warm, _ = _python_batch(spark, emb, 10, id_offset=100_000)
+    AX.topk_ivf_index(spark, warm, path, k=5, nprobe=4).count()
+    for write in (False, True):
+        if write:  # the next probe reopens the snapshot
+            AX.ivf_index_append(emb.filter(F.col("vec_id") < 40), path,
+                                batch_id=0)
+        queries, reads = _python_batch(spark, emb, 10, id_offset=100_000)
+        with _jobs_fired(spark) as jobs:
+            got = AX.topk_ivf_index(spark, queries, path, k=5, nprobe=4)
+        assert "MapInPandas" in formatted_plan(got)  # the shared path
+        assert len(jobs) <= (3 if write else 2), (write, jobs)
+        assert got.count() == 50
+        assert reads.value == 10
+
+
+def test_bruteforce_reads_python_batch_once(spark, emb):
+    """topk_bruteforce counts its guard on the checkpointed query side,
+    so a Python-built batch is read once for the guard and the
+    broadcast together."""
+    queries, reads = _python_batch(spark, emb, 10, id_offset=100_000)
+    got = SS.topk_bruteforce(emb, queries, k=5, dim=64)
+    got.write.format("noop").mode("overwrite").save()
+    assert reads.value == 10
+
+
+def test_append_reads_python_batch_once(spark, emb, tmp_path):
+    """ivf_index_append checkpoints the assigned batch, so the hot-cell
+    count of _cell_shape and the write share one assignment pass."""
+    path = str(tmp_path / "ivf")
+    AX.build_ivf_index(emb.filter(F.col("vec_id") >= 40), path, nlist=8)
+    batch, reads = _python_batch(spark, emb, 40)
+    AX.ivf_index_append(batch, path, batch_id=0)
+    assert reads.value == 40
+    appended = AX.read_ivf_data(spark, path).filter(F.col("_batch_id") == 0)
+    assert sorted(r["vec_id"] for r in appended.collect()) == list(range(40))

@@ -109,6 +109,41 @@ def test_while_delta_lineage_truncated(spark):
     assert "Join" not in plan  # step lineage truncated at each delta
 
 
+def test_while_stride2_relies_on_empty_step_of_empty_frontier(spark):
+    """whileop._run checks emptiness every second step: when the first
+    delta is empty it still applies the step to that empty delta and
+    stops only if the second delta is empty too. That is sound only
+    under the produce(∅) = ∅ contract in its docstring. Degenerate
+    steps that add nothing converge at the first application and
+    return the seed; a step that breaks the contract (a global
+    aggregate yields a row for an empty frontier) changes the answer
+    with the stride alignment."""
+    seed = spark.createDataFrame([(1,)], "x long")
+    frontiers = []
+
+    def identity(fr):
+        frontiers.append(fr)
+        return fr
+
+    out = fixpoint(seed, identity, max_iterations=2)
+    assert [r["x"] for r in out.collect()] == [1]
+    # the fused second application saw the empty first delta
+    assert len(frontiers) == 2 and frontiers[1].count() == 0
+
+    nothing = fixpoint(seed, lambda fr: fr.filter(F.lit(False)))
+    assert [r["x"] for r in nothing.collect()] == [1]
+
+    def count_step(fr):  # count(∅) = 0: produce(∅) ≠ ∅
+        return fr.agg(F.count(F.lit(1)).alias("x"))
+
+    # one application: {1} yields {1}, nothing new, the loop stops
+    assert [r["x"] for r in fixpoint(seed, count_step, max_iterations=1)
+            .collect()] == [1]
+    # fused applications: the empty delta yields {0}, counted as new
+    assert sorted(r["x"] for r in fixpoint(seed, count_step)
+                  .collect()) == [0, 1]
+
+
 def test_nest_unnest_roundtrip(spdb):
     SP = spdb["SP"]
     nested = nest(SP, ["S#"], rva="items")

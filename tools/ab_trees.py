@@ -14,7 +14,9 @@ Usage:
 Timing methodology matches bench.py: wall-clock around build + count()
 per invocation. Reported per query: every raw sample, median and MIN
 per side, and the old/new ratio on the mins (the burst-robust
-estimator, REPRO.md).
+estimator, REPRO.md). The result is printed (and written with --out)
+either way; the exit status is 1 when any query's row count differs
+between the trees (ROWCOUNT_MISMATCH).
 
 Import isolation: each tree's `andl_spark.*` modules are imported once
 under that tree's sys.path and then *removed* from sys.modules; at
@@ -164,6 +166,11 @@ def main() -> None:
             f.write(text + "\n")
         print(f"wrote {out_path}", file=sys.stderr)
     print(text)
+    mismatched = [n for n, q in result["queries"].items()
+                  if q.get("ROWCOUNT_MISMATCH")]
+    if mismatched:
+        raise SystemExit(f"ROWCOUNT_MISMATCH: the trees return different "
+                         f"row counts for {', '.join(mismatched)}")
 
 
 if __name__ == "__main__":
