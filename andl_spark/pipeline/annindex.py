@@ -115,20 +115,25 @@ SALT_ROWS_PER_TASK = 1_000_000
 
 
 def _cell_shape(df: DataFrame, rows_per_task: int = SALT_ROWS_PER_TASK,
-                key_col: str = "vec_id") -> DataFrame:
+                key_col: str = "vec_id",
+                counts: dict | None = None) -> DataFrame:
     """Shuffle shape for the cell-partitioned writes, with HOT-CELL
-    salting: count rows per cell (one map-side-combined aggregation —
-    on a parquet-backed frame it reads only the list_id partition
-    column; a freshly-assigned frame is assigned once for this count
-    and again for the write, unless the caller checkpoints it first,
-    as ivf_index_append does with its batch), then give
-    cell i ``ceil(rows_i / rows_per_task)`` salt buckets keyed by
-    ``xxhash64(vec_id)``. Uniform corpora keep width 1 everywhere —
-    the one-file-per-cell invariant the r8b pins assert — while a hot
-    cell writes across its width in parallel with files-per-cell ≤
-    width (plus the maxRecordsPerFile bound on the write itself)."""
-    cnts = {r[0]: r[1] for r in df.groupBy("list_id").count().collect()}
-    hot = {lid: -(-c // rows_per_task) for lid, c in cnts.items()
+    salting: cell i gets ``ceil(rows_i / rows_per_task)`` salt buckets
+    keyed by ``xxhash64(key_col)``. Uniform corpora keep width 1
+    everywhere (one file per cell), while a hot cell writes across its
+    width in parallel with files-per-cell ≤ width (plus the
+    maxRecordsPerFile bound on the write itself).
+
+    ``counts`` maps cell → row count of ``df`` when the caller already
+    knows it (the compaction fold gets it from its dirty-cell
+    aggregate). Otherwise this counts rows per cell with one
+    map-side-combined aggregation, which re-evaluates ``df``: a
+    parquet-backed frame reads only its list_id partition column, and
+    a freshly assigned frame should be checkpointed first, as
+    ivf_index_append does with its batch."""
+    if counts is None:
+        counts = dict(df.groupBy("list_id").count().collect())
+    hot = {lid: -(-c // rows_per_task) for lid, c in counts.items()
            if c > rows_per_task}
     if not hot:
         return df.repartition("list_id")
@@ -760,60 +765,67 @@ def measure_ivf_recall(spark: SparkSession, path: str,
                        n_holdout: int = 32,
                        holdout: DataFrame | None = None,
                        sample_rows: int | None = GAUGE_SAMPLE_ROWS) -> dict:
-    """Measure the index's CURRENT recall under its FROZEN quantizer
-    (r9; VERDICT r8 item 4 — annindex's own 'rebuild when the
-    calibration's measured recall decays' advice, made measurable):
-    appends quantize against the stored centroids, so after 10× growth
-    or a distribution shift the build-time calibration silently
-    overstates recall. One exhaustive holdout pass (the calibrate_probe
-    machinery — exact recall at every depth, cost O(h·N), a
-    maintenance-job expense) against the live rows, with the holdout
-    defaulting to the NEWEST appended batch's vectors — the traffic
-    most likely to have drifted off the build-time corpus; pass
-    ``holdout=`` to gauge external query traffic instead.
+    """Measure the index's current recall under its frozen quantizer.
+    Appends quantize against the stored centroids, so after growth or
+    a distribution shift the build-time calibration can overstate
+    recall. The gauge runs one exhaustive holdout pass (the
+    calibrate_probe machinery: exact recall at every depth, cost
+    O(holdout × N)) against the live rows. The holdout defaults to the
+    newest appended batch's vectors, the traffic most likely to have
+    drifted off the build-time corpus; pass ``holdout=`` to gauge
+    external query traffic instead.
 
     Returns a gauge record: the fresh smallest depth reaching the
     stored target (``measured_nprobe``/``measured_p1``), the exact
-    recall AT the stored operating point (``recall_at_stored``), and
-    ``decayed`` = that recall fell below the stored target — the
-    rebuild trigger as a number. :func:`compact_ivf_index` runs this
-    beside each compaction (when the index stores a calibration and
-    has appended batches) and commits it into the new generation's
-    ``_meta.json`` next to the build-time calibration.
+    recall at the stored operating point (``recall_at_stored``), and
+    ``decayed`` = that recall fell below the stored target.
+    :func:`compact_ivf_index` runs this beside each compaction (when
+    the index stores a calibration and has appended batches) and
+    commits the record into the new generation's ``_meta.json`` next
+    to the build-time calibration.
 
-    ``sample_rows`` (r10; VERDICT r9 item 2): above this many live
-    rows the exhaustive pass runs against a DETERMINISTIC
-    xxhash64(vec_id) row sample instead of the whole corpus — gauge
-    cost becomes O(holdout × sample) instead of O(holdout × N), a 76×
-    cut at the 20M rehearsal's geometry. The sampled reading is a
-    conservative (biased-low) estimate — see GAUGE_SAMPLE_ROWS — and
-    the gauge record says when and how it sampled (``sampled_n`` /
-    ``corpus_n``). ``sample_rows=None`` forces the exhaustive pass."""
+    Each input is read once. One per-batch row count of the live rows
+    (the tombstone anti-join runs there) yields both the newest batch
+    and the live row count. The scored corpus, after the sampling
+    decision below, is materialised by one ``localCheckpoint``; the
+    default holdout is taken from that checkpoint unless the corpus
+    was sampled. The pass scores every row in its STORED ``list_id``
+    rather than re-quantizing it: appends and builds assign under the
+    same stored quantizer and the serving path's auto rule, so the
+    stored cell is exactly the cell a query scans.
+
+    ``sample_rows``: above this many live rows the pass scores a
+    DETERMINISTIC xxhash64(vec_id) row sample instead of the whole
+    corpus, so its cost is O(holdout × sample). The sampled reading
+    is a conservative (biased-low) estimate — see GAUGE_SAMPLE_ROWS —
+    and the record then carries ``sampled_n`` and ``corpus_n``.
+    ``sample_rows=None`` forces the exhaustive pass."""
     meta, data = read_ivf_snapshot(spark, path)
     cal = meta.get("calibration")
     target = cal["target"] if cal else 0.9
     k = cal["k"] if cal else 5
     live = (data.filter(F.col("list_id") != TOMBSTONE_LIST)
             .join(_tombstone_ids(data), "vec_id", "left_anti")
-            .select("vec_id", "embedding", "_batch_id"))
-    holdout_batch = None
-    if holdout is None:
-        bids = [r[0] for r in live.select("_batch_id").distinct().collect()]
-        appended = [b for b in bids if b >= 0]
-        if appended:
-            holdout_batch = max(appended)
-            holdout = live.filter(F.col("_batch_id") == holdout_batch)
-    corpus = live.drop("_batch_id")
-    corpus_n = sampled_n = None
-    if sample_rows is not None:
-        # column-pruned count (vec_id/list_id only — embeddings unread)
-        corpus_n = corpus.count()
-        if corpus_n > sample_rows:
-            denom = 1_000_000
-            thresh = max(1, int(denom * sample_rows / corpus_n))
-            corpus = corpus.filter(
-                F.pmod(F.xxhash64(F.col("vec_id")), F.lit(denom)) < thresh)
-            sampled_n = corpus.count()
+            .select("vec_id", "embedding", "list_id", "_batch_id"))
+    # column-pruned (vec_id/list_id/_batch_id — embeddings unread)
+    per_batch = dict(live.groupBy("_batch_id").count().collect())
+    corpus_n = sum(per_batch.values())
+    appended = [b for b in per_batch if b >= 0]
+    holdout_batch = (max(appended)
+                     if holdout is None and appended else None)
+    corpus = live
+    sampled = sample_rows is not None and corpus_n > sample_rows
+    if sampled:
+        denom = 1_000_000
+        thresh = max(1, int(denom * sample_rows / corpus_n))
+        corpus = corpus.filter(
+            F.pmod(F.xxhash64(F.col("vec_id")), F.lit(denom)) < thresh)
+    corpus = corpus.localCheckpoint()
+    sampled_n = corpus.count() if sampled else None
+    if holdout_batch is not None:
+        holdout = (live if sampled else corpus).filter(
+            F.col("_batch_id") == holdout_batch)
+    corpus = corpus.drop("_batch_id")
     hier = meta.get("kind") == "hier"
     if hier:
         stored = cal["p1"] if cal else None
@@ -821,7 +833,7 @@ def measure_ivf_recall(spark: SparkSession, path: str,
             corpus, "vec_id", "embedding", k=k, target_recall=target,
             n_holdout=n_holdout, n1=meta["n1"], n2=meta["n2"],
             quantizer=meta["quantizer"], cents=(meta["C1"], meta["C2"]),
-            holdout=holdout,
+            holdout=holdout, cell_col="list_id",
             report_depths=(stored,) if stored else ())
         fresh = rec["p1"]
     else:
@@ -830,7 +842,7 @@ def measure_ivf_recall(spark: SparkSession, path: str,
             corpus, "vec_id", "embedding", k=k, target_recall=target,
             n_holdout=n_holdout, nlist=meta["nlist"],
             quantizer=meta["quantizer"], centroids=meta["centroids"],
-            holdout=holdout,
+            holdout=holdout, cell_col="list_id",
             report_depths=(stored,) if stored else ())
         fresh = rec["nprobe"]
     at_stored = (rec.get("at_depths", {}).get(stored)
@@ -845,7 +857,7 @@ def measure_ivf_recall(spark: SparkSession, path: str,
         "holdout_batch": holdout_batch,
         "decayed": (at_stored is not None and at_stored < target),
     }
-    if sampled_n is not None:
+    if sampled:
         # the reading came from a row sample: conservative (biased
         # low — see GAUGE_SAMPLE_ROWS), recorded so a reader of the
         # meta knows the estimate's basis
@@ -871,62 +883,64 @@ INCREMENTAL_MAX_DIRTY_FRAC = 0.5
 
 
 def _incremental_fold_plan(raw: DataFrame, max_bid, src: str):
-    """The dirty-cell compaction plan (r10; VERDICT r9 item 1): the
-    r9 compact folded the ENTIRE generation — at the 20M rehearsal,
-    1227.8 s to rewrite all rows even when one batch had landed in a
-    few cells; at 100 TB that is a corpus rewrite per compaction. A
-    cell's folded content can only differ from its current seed files
-    when (a) a non-kept batch delivered rows into it, or (b) a
-    tombstone masks one of its rows. So:
+    """The dirty-cell compaction plan: fold only the cells whose
+    content changed and carry every other cell file verbatim. A cell's
+    folded content can differ from its seed files only when (a) a
+    folded batch delivered rows into it, or (b) a tombstone masks one
+    of its rows. So:
 
-    - DIRTY CELLS are found with a column-pruned scan of (vec_id,
-      list_id, _batch_id) alone — parquet never reads the embedding
-      bytes for this — and collected driver-side (bounded by nlist);
+    - one aggregate, ``groupBy(list_id, is_batch_row, masked).count()``
+      over the column-pruned ``(vec_id, list_id, _batch_id)`` rows of
+      the folded batches (parquet never reads the embedding bytes),
+      yields both the DIRTY CELLS and the per-cell row counts of the
+      rows this plan returns; it is collected driver-side (at most
+      4·(nlist + 1) rows). Without a tombstone partition ``masked``
+      is constant and the scan reads partition columns only;
     - the fold reads and rewrites ONLY dirty cells' full rows (the
       ``isin`` lands in PartitionFilters, so clean cells' bytes are
-      never opened) plus the always-rewritten tombstone partition;
+      never opened), minus masked rows, plus the always-rewritten
+      tombstone partition;
     - every CLEAN seed cell and the kept max batch carry into the new
       generation VERBATIM via fsio.copy_tree — hardlinks on POSIX, a
       byte copy (no decode, no shuffle) elsewhere.
 
-    Semantics are row-identical to the full fold by construction: a
-    clean cell's seed files already hold exactly its live rows
-    (pinned in tests/test_annindex.py against the full fold).
+    The result is row-identical to the full fold: a clean cell's seed
+    files already hold exactly its live rows (pinned in
+    tests/test_annindex.py against ``incremental=False``).
 
     SCATTERED-CHURN FALLBACK: when the dirty fraction exceeds
-    :data:`INCREMENTAL_MAX_DIRTY_FRAC` (a widely-scattered append
-    touches every cell), the per-cell copies and the isin filter buy
-    nothing over the full fold — the plan then folds EVERY cell in one
-    pass (still carrying the kept max batch verbatim, which the full
-    fold used to rewrite). Either way the committed generation is
-    row-identical."""
-    slim = raw.select("vec_id", "list_id", "_batch_id")
+    :data:`INCREMENTAL_MAX_DIRTY_FRAC` (a widely scattered append
+    touches most cells), the per-cell copies and the isin filter buy
+    nothing, so the plan folds EVERY cell in one pass (still carrying
+    the kept max batch verbatim).
+
+    Returns ``(rows, copy_rel, counts)``: the rows to write (relabelled
+    ``_batch_id=-1``), the src-relative leaf dirs to copy, and
+    ``counts`` = list_id → row count of ``rows`` for _cell_shape."""
     has_kept = max_bid is not None and max_bid >= 0
-    fold_slim = (slim.filter(F.col("_batch_id") != max_bid)
-                 if has_kept else slim)
-    # the APPEND-ONLY fast path (r10): with no tombstone partition
-    # anywhere in the generation, masked-row detection is skipped
-    # entirely, so the dirty scan touches only the batch partitions
-    # (partition-pruned) instead of semi-joining every seed row's
-    # vec_id against the tombstone set. r11 (VERDICT r10 item 5): the
-    # check is one listdir per batch dir — not a driver-side listing
-    # of every data file via inputFiles()
-    tomb_exists = _has_tombstones(src)
-    dirty_df = (
-        fold_slim.filter((F.col("_batch_id") >= 0)
-                         & (F.col("list_id") != TOMBSTONE_LIST))
-        .select("list_id"))
+    fold_src = (raw.filter(F.col("_batch_id") != max_bid)
+                if has_kept else raw)
+    # a listing, not a scan: with no tombstone partition anywhere
+    # nothing is masked and the aggregate skips the vec_id join
     tomb = None
-    if tomb_exists:
-        # tombstones from ALL batches (kept included) mask folded
-        # rows — the same set the full fold's fold_transform used
+    if _has_tombstones(src):
+        # tombstones from ALL batches (kept included) mask folded rows
+        # — the same set the full fold's fold_transform uses
         tomb = (raw.filter(F.col("list_id") == TOMBSTONE_LIST)
                 .select("vec_id").distinct())
-        dirty_df = dirty_df.unionByName(
-            fold_slim.filter(F.col("list_id") != TOMBSTONE_LIST)
-            .join(tomb, "vec_id", "left_semi").select("list_id"))
-    dirty = sorted(r[0] for r in dirty_df.distinct().collect())
-    dirty_set = set(dirty)
+    slim = fold_src.select(
+        "vec_id", "list_id",
+        (F.col("_batch_id") >= 0).alias("is_batch_row"))
+    if tomb is None:
+        slim = slim.withColumn("masked", F.lit(False))
+    else:
+        slim = (slim.join(tomb.withColumn("masked", F.lit(True)),
+                          "vec_id", "left")
+                .withColumn("masked", F.coalesce("masked", F.lit(False))))
+    groups = (slim.groupBy("list_id", "is_batch_row", "masked").count()
+              .collect())
+    dirty_set = {lid for lid, batch_row, masked, _ in groups
+                 if lid != TOMBSTONE_LIST and (batch_row or masked)}
 
     seed_cells = {
         int(n.split("=", 1)[1])
@@ -937,11 +951,17 @@ def _incremental_fold_plan(raw: DataFrame, max_bid, src: str):
                 or len(dirty_set) > INCREMENTAL_MAX_DIRTY_FRAC
                 * len(all_cells))
 
-    fold_src = (raw.filter(F.col("_batch_id") != max_bid)
-                if has_kept else raw)
+    counts: Counter = Counter()
+    for lid, _, masked, n in groups:
+        # tombstone rows are all retained; data rows survive unmasked
+        # in the cells the fold rewrites
+        if lid == TOMBSTONE_LIST or (
+                not masked and (fold_all or lid in dirty_set)):
+            counts[lid] += n
+
     live = fold_src.filter(F.col("list_id") != TOMBSTONE_LIST)
     if not fold_all:  # prune the scan to dirty cells only
-        live = live.filter(F.col("list_id").isin(dirty))
+        live = live.filter(F.col("list_id").isin(sorted(dirty_set)))
     if tomb is not None:
         live = live.join(tomb, "vec_id", "left_anti")
         rows = live.unionByName(
@@ -958,7 +978,7 @@ def _incremental_fold_plan(raw: DataFrame, max_bid, src: str):
                                           f"list_id={cid}"))
     if has_kept:
         copy_rel.append(f"_batch_id={max_bid}")
-    return rows, copy_rel
+    return rows, copy_rel, dict(counts)
 
 
 def compact_ivf_index(spark: SparkSession, path: str,
@@ -977,15 +997,16 @@ def compact_ivf_index(spark: SparkSession, path: str,
     hot-cell salting — see _cell_shape), so there is no target_files
     knob here.
 
-    ``incremental`` (r10, default; VERDICT r9 item 1): fold ONLY the
-    cells that batch fragments or tombstone masks actually touched and
-    carry every clean cell file into the new generation by
-    hardlink/byte-copy — compaction cost becomes proportional to the
-    DIRTY FRACTION instead of the corpus (the r9 rehearsal's 1227.8 s
-    full fold at 20M is the measured number this removes). Results are
-    row-identical to the full fold (``incremental=False``), pinned in
-    tests. The full fold remains the right tool after heavy churn
-    (most cells dirty) since it also re-shapes cold cells' files.
+    ``incremental`` (default): fold ONLY the cells that batch rows or
+    tombstone masks touched and carry every clean cell file into the
+    new generation by hardlink/byte-copy (see _incremental_fold_plan),
+    so compaction cost follows the DIRTY FRACTION, not the corpus.
+    The plan's one aggregate also supplies the per-cell counts the
+    fold write's hot-cell salting needs; late-carried batches are
+    counted when they are written. Results are row-identical to the
+    full fold (``incremental=False``), pinned in tests. The full fold
+    remains the right tool after heavy churn since it also re-shapes
+    cold cells' files.
 
     Tombstoned vectors (ivf_index_delete) are PHYSICALLY removed from
     the folded rows here — the fold antijoins every dirty data row
@@ -994,26 +1015,24 @@ def compact_ivf_index(spark: SparkSession, path: str,
     masking ids that a kept-batch replay or late-carried batch could
     re-deliver (see ivf_index_delete's retention rationale).
 
-    RETENTION BOUNDS at high churn (VERDICT r9 item 8), as functions
-    of the append rate a and delete-batch rate d between compactions:
-    pointer files ≤ KEEP+1 (= 3) regardless of churn (pointer.commit
-    GCs); top-level batch dirs in the live generation grow as a + d
-    and collapse to ≤ 2 (seed + kept max batch) at each compaction;
-    tombstone ROWS grow with total deletes since the last rebuild
-    (≈ 16 bytes/id in parquet — negligible next to the vectors they
-    mask) and their FILES collapse to the single folded ``list_id=-1``
-    partition per compaction; on-disk generations are always ≤ 2
-    (current + retained). Pinned by the high-churn soak in
-    tests/test_annindex.py.
+    RETENTION BOUNDS at high churn, as functions of the append rate a
+    and delete-batch rate d between compactions: pointer files ≤
+    KEEP+1 (= 3) regardless of churn (pointer.commit GCs); top-level
+    batch dirs in the live generation grow as a + d and collapse to
+    ≤ 2 (seed + kept max batch) at each compaction; tombstone ROWS
+    grow with total deletes since the last rebuild (≈ 16 bytes/id in
+    parquet — negligible next to the vectors they mask) and their
+    FILES collapse to the single folded ``list_id=-1`` partition per
+    compaction; on-disk generations are always ≤ 2 (current +
+    retained). Pinned by the high-churn soak in tests/test_annindex.py.
 
-    ``gauge`` (r9; VERDICT r8 item 4): None = auto — when the index
-    stores a build-time calibration AND has appended batches, run
+    ``gauge``: None = auto — when the index stores a build-time
+    calibration AND has appended batches, run
     :func:`measure_ivf_recall` against the current generation (holdout
-    = newest appended batch) and commit the gauge record into the new
-    generation's ``_meta.json``, making recall decay a stored number
-    instead of a guess. True forces it, False skips it. r10: the gauge
-    bounds its corpus pass to a deterministic row sample (see
-    measure_ivf_recall), so it no longer dominates compaction."""
+    = newest appended batch, corpus bounded by a deterministic row
+    sample) and commit the gauge record into the new generation's
+    ``_meta.json``, making recall decay a stored number instead of a
+    guess. True forces it, False skips it."""
     do_gauge = gauge
     if do_gauge is None:
         try:
@@ -1040,14 +1059,26 @@ def compact_ivf_index(spark: SparkSession, path: str,
         return live.unionByName(
             folded.filter(F.col("list_id") == TOMBSTONE_LIST))
 
+    fold: dict = {}
+
+    def _plan(raw: DataFrame, max_bid, src: str):
+        rows, copy_rel, fold["counts"] = _incremental_fold_plan(
+            raw, max_bid, src)
+        fold["rows"] = rows
+        return rows, copy_rel
+
+    def _shape(df: DataFrame) -> DataFrame:
+        # the fold write reuses the plan's per-cell counts; a late
+        # carry (any other frame) counts its own rows
+        counts = fold.get("counts") if df is fold.get("rows") else None
+        return _cell_shape(df, rows_per_task, counts=counts)
+
     try:
         compact_neardup_index(spark, fsio.join(path, "data"),
                               part_cols=PART_COLS,
                               fold_transform=_fold,
-                              fold_plan=(_incremental_fold_plan
-                                         if incremental else None),
-                              shape=lambda df: _cell_shape(df,
-                                                           rows_per_task),
+                              fold_plan=_plan if incremental else None,
+                              shape=_shape,
                               max_records_per_file=rows_per_task,
                               meta_overrides=meta_overrides,
                               quiesce_timeout=quiesce_timeout,

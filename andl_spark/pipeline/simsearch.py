@@ -1458,6 +1458,7 @@ def calibrate_probe(
     version: object = None,
     holdout: DataFrame | None = None,
     report_depths: tuple = (),
+    cell_col: str | None = None,
 ) -> dict:
     """Measure, don't guess, the flat-IVF probe depth: returns a record
     whose ``nprobe`` is the SMALLEST depth whose recall@k on a
@@ -1476,9 +1477,16 @@ def calibrate_probe(
     every query the index serves and cached per corpus identity like
     the quantizers. Assignment follows the serving path's auto rule
     (numpy matmul at nlist ≥ NP_ASSIGN_MIN_NLIST, literal expression
-    below — the two agree to the 4-decimal rounding)."""
+    below — the two agree to the 4-decimal rounding).
+
+    ``cell_col`` names a column that already holds each corpus row's
+    cell under ``centroids`` (a persisted index's stored ``list_id``):
+    the pass scores rows in that cell instead of re-quantizing them."""
     if not (0.0 < target_recall <= 1.0):
         raise ValueError(f"target_recall must be in (0, 1], got {target_recall}")
+    if cell_col is not None and centroids is None:
+        raise ValueError("calibrate_probe: cell_col needs the centroids "
+                         "the stored cells were assigned under")
     if nlist is None:
         if corpus_count is None:
             corpus_count = corpus.count()
@@ -1489,7 +1497,7 @@ def calibrate_probe(
     key = ("flat", corpus.sparkSession.sparkContext.applicationId,
            id_col, vec_col, k, target_recall, n_holdout, nlist,
            quantizer, cents_key, corpus.semanticHash(), version,
-           hold_key, tuple(report_depths))
+           hold_key, tuple(report_depths), cell_col)
     if key in _CALIB_CACHE:
         return _CALIB_CACHE[key]
     if centroids is None:
@@ -1503,7 +1511,9 @@ def calibrate_probe(
             raise ValueError(f"unknown quantizer {quantizer!r} (seed | trained)")
     n_cells = len(centroids)
     use_np = n_cells >= NP_ASSIGN_MIN_NLIST
-    if use_np:
+    if cell_col is not None:
+        assign1 = F.col(cell_col)
+    elif use_np:
         assign1 = F.element_at(nearest_lists_np(centroids, 1)(F.col(vec_col)), 1)
     else:
         assign1 = F.element_at(
@@ -1551,6 +1561,7 @@ def calibrate_probe_hier(
     version: object = None,
     holdout: DataFrame | None = None,
     report_depths: tuple = (),
+    cell_col: str | None = None,
 ) -> dict:
     """calibrate_probe for the two-level quantizer: the dial is ``p1``
     (how many TOP cells a query probes — every sub-cell of a probed top
@@ -1558,9 +1569,14 @@ def calibrate_probe_hier(
     one-pass method with probe_pos = the candidate's l1 rank in the
     query's preference order; the collect shrinks to
     n_holdout·n1·k rows because top-k WITHIN an l1 block suffices.
-    Wired into topk_ivf_hier as ``calibrate=<target>``."""
+    Wired into topk_ivf_hier as ``calibrate=<target>``. ``cell_col``
+    reads each row's combined cell id from that column instead of
+    re-assigning it, as in calibrate_probe (needs ``cents``)."""
     if not (0.0 < target_recall <= 1.0):
         raise ValueError(f"target_recall must be in (0, 1], got {target_recall}")
+    if cell_col is not None and cents is None:
+        raise ValueError("calibrate_probe_hier: cell_col needs the cents "
+                         "the stored cells were assigned under")
     if corpus_count is None and (n1 is None or n2 is None):
         corpus_count = corpus.count()
     a1, a2, _ = hier_params(corpus_count or 0)
@@ -1575,7 +1591,7 @@ def calibrate_probe_hier(
     key = ("hier", corpus.sparkSession.sparkContext.applicationId,
            id_col, vec_col, k, target_recall, n_holdout, n1, n2,
            quantizer, cents_key, corpus.semanticHash(), version,
-           hold_key, tuple(report_depths))
+           hold_key, tuple(report_depths), cell_col)
     if key in _CALIB_CACHE:
         return _CALIB_CACHE[key]
     if cents is None:
@@ -1595,7 +1611,8 @@ def calibrate_probe_hier(
     c = corpus.select(
         F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cvec"),
         F.expr(_hof_norm_sql(vec_col)).alias("cn"),
-        hier_assign_np(C1, C2)(F.col(vec_col)).alias("list_id"))
+        (F.col(cell_col) if cell_col is not None
+         else hier_assign_np(C1, C2)(F.col(vec_col))).alias("list_id"))
     h = _calib_holdout(corpus, id_col, vec_col, n_holdout, holdout)
     grid = h.select(
         "query_id",

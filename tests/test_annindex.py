@@ -1784,3 +1784,87 @@ def test_append_reads_python_batch_once(spark, emb, tmp_path):
     assert reads.value == 40
     appended = AX.read_ivf_data(spark, path).filter(F.col("_batch_id") == 0)
     assert sorted(r["vec_id"] for r in appended.collect()) == list(range(40))
+
+
+def test_compaction_job_budget(spark, emb, tmp_path):
+    """A compaction after one append and one delete, with the recall
+    gauge engaged, fires at most 24 jobs: the gauge reads the live rows
+    once for its per-batch count and once into its checkpoint, and the
+    fold takes its dirty cells and hot-cell counts from one aggregate.
+    The compacted generation stores exactly the live ids."""
+    path = str(tmp_path / "ivf")
+    AX.build_ivf_index(emb.filter(F.col("vec_id") >= 50), path,
+                       calibrate=0.9)
+    AX.ivf_index_append(emb.filter(F.col("vec_id") < 50), path, batch_id=0)
+    victims = list(range(100, 140, 2))
+    AX.ivf_index_delete(victims, path, batch_id=1, spark=spark)
+    with _jobs_fired(spark) as jobs:
+        AX.compact_ivf_index(spark, path)
+    assert len(jobs) <= 24, jobs
+    assert "gauge" in AX.read_ivf_meta(path)
+    data = AX.read_ivf_data(spark, path)
+    stored = {r["vec_id"] for r in data.filter(
+        F.col("list_id") != AX.TOMBSTONE_LIST).collect()}
+    assert stored == set(range(500)) - set(victims)
+
+
+@pytest.mark.parametrize("kind", ["flat", "hier"])
+def test_gauge_scores_stored_cells_like_requantizing_path(
+        spark, emb, tmp_path, kind):
+    """measure_ivf_recall scores the live rows in their stored cells;
+    its record equals the re-quantizing calibrator's run on the same
+    live rows with the stored quantizer, the newest batch as holdout
+    and the stored depth reported — with the row sample engaged and
+    without it."""
+    path = str(tmp_path / "ivf")
+    shape = {"nlist": 8} if kind == "flat" else {"n1": 3, "n2": 3}
+    meta = AX.build_ivf_index(emb.filter(F.col("vec_id") % 2 == 0), path,
+                              calibrate=0.9, **shape)
+    odd = emb.filter(F.col("vec_id") % 2 == 1)
+    AX.ivf_index_append(odd.filter(F.col("vec_id") < 200), path,
+                        batch_id=0)
+    AX.ivf_index_delete(list(range(0, 60, 3)), path, batch_id=1,
+                        spark=spark)
+    AX.ivf_index_append(odd.filter(F.col("vec_id") >= 400), path,
+                        batch_id=2)
+    _, data = AX.read_ivf_snapshot(spark, path)
+    live = (data.filter(F.col("list_id") != AX.TOMBSTONE_LIST)
+            .join(AX._tombstone_ids(data), "vec_id", "left_anti")
+            .select("vec_id", "embedding", "_batch_id"))
+    n_live = live.count()
+    holdout = live.filter(F.col("_batch_id") == 2)
+    cal = meta["calibration"]
+    for sample_rows in (None, 100):
+        corpus = live.drop("_batch_id")
+        if sample_rows is not None:
+            assert n_live > sample_rows
+            thresh = max(1, int(1_000_000 * sample_rows / n_live))
+            corpus = corpus.filter(F.pmod(
+                F.xxhash64(F.col("vec_id")), F.lit(1_000_000)) < thresh)
+        if kind == "flat":
+            stored = cal["nprobe"]
+            rec = SS.calibrate_probe(
+                corpus, k=cal["k"], target_recall=cal["target"],
+                nlist=meta["nlist"], quantizer=meta["quantizer"],
+                centroids=meta["centroids"], holdout=holdout,
+                report_depths=(stored,))
+            fresh = ("measured_nprobe", rec["nprobe"])
+        else:
+            stored = cal["p1"]
+            rec = SS.calibrate_probe_hier(
+                corpus, k=cal["k"], target_recall=cal["target"],
+                n1=meta["n1"], n2=meta["n2"], quantizer=meta["quantizer"],
+                cents=(meta["C1"], meta["C2"]), holdout=holdout,
+                report_depths=(stored,))
+            fresh = ("measured_p1", rec["p1"])
+        at_stored = rec["at_depths"][stored]
+        want = {"kind": kind, fresh[0]: fresh[1], "stored": stored,
+                "recall_at_stored": at_stored, "target": cal["target"],
+                "k": cal["k"], "n_holdout": rec["n_holdout"],
+                "holdout_batch": 2,
+                "decayed": at_stored < cal["target"]}
+        if sample_rows is not None:
+            want["corpus_n"] = n_live
+            want["sampled_n"] = corpus.count()
+        got = AX.measure_ivf_recall(spark, path, sample_rows=sample_rows)
+        assert got == want, (sample_rows, got, want)

@@ -4,7 +4,9 @@ Single-shot suites taken hours apart measure which run hit a container
 noise burst, not which tree is faster. This tool answers the tree
 question directly: it imports TWO checkouts' `andl_spark` packages in
 one process, builds ONE SparkSession, and alternates timed invocations
-A,B,A,B,... per query so a burst degrades both trees equally.
+per query so a burst degrades both trees equally. The order flips on
+every rep (A,B then B,A), so neither tree always runs on the state the
+other one warmed, and every query runs once per tree untimed first.
 
 Usage:
   git worktree add --detach /tmp/ab_old <old_ref>
@@ -12,9 +14,12 @@ Usage:
       [--queries q1,q2,...] [--reps N] [--out ABTREES_rN.json]
 
 Timing methodology matches bench.py: wall-clock around build + count()
-per invocation. Reported per query: every raw sample, median and MIN
-per side, and the old/new ratio on the mins (the burst-robust
-estimator, REPRO.md). The result is printed (and written with --out)
+per invocation. The one session is built by the NEW tree's get_spark,
+so the old tree is measured under the new tree's confs: both trees'
+session confs are printed and recorded in the output
+(``old_confs``/``new_confs``), and any difference is flagged on stderr.
+Reported per query: every raw sample, median and MIN per side, and the
+old/new ratio on the mins (the burst-robust estimator, REPRO.md). The result is printed (and written with --out)
 either way; the exit status is 1 when any query's row count differs
 between the trees (ROWCOUNT_MISMATCH).
 
@@ -45,6 +50,44 @@ def _clear() -> None:
             del sys.modules[k]
 
 
+class _ConfRecorder:
+    """Stands in for ``SparkSession.builder``: records what a tree's
+    get_spark would set, without starting a session."""
+
+    def __init__(self):
+        self.confs: dict[str, str] = {}
+
+    @property
+    def builder(self):
+        return self
+
+    def master(self, master):
+        self.confs["spark.master"] = master
+        return self
+
+    def appName(self, name):
+        return self
+
+    def config(self, key, value):
+        self.confs[key] = str(value)
+        return self
+
+    def getOrCreate(self):
+        return self
+
+
+def _session_confs(session_mod) -> dict[str, str]:
+    """The confs ``session_mod.get_spark`` sets (see _ConfRecorder)."""
+    rec = _ConfRecorder()
+    real = session_mod.SparkSession
+    session_mod.SparkSession = rec
+    try:
+        session_mod.get_spark("andl_spark-abtrees")
+    finally:
+        session_mod.SparkSession = real
+    return dict(sorted(rec.confs.items()))
+
+
 class Tree:
     """One checkout's workload, importable side by side with another."""
 
@@ -63,6 +106,7 @@ class Tree:
             sys.path.remove(self.path)
             _clear()
             sys.modules.update(saved)
+        self.confs = _session_confs(self.session)
         wl = self.workload
         self.queries = dict(getattr(wl, "QUERIES", {}))
         self.queries.update(getattr(wl, "BENCH_EXTRA", {}))
@@ -100,6 +144,14 @@ def main() -> None:
     old = Tree(old_path, "old")
     new = Tree(new_path, "new")
 
+    for tree in (old, new):
+        print(f"# {tree.tag} session confs: {json.dumps(tree.confs)}",
+              file=sys.stderr)
+    conf_diff = sorted(k for k in old.confs.keys() | new.confs.keys()
+                       if old.confs.get(k) != new.confs.get(k))
+    if conf_diff:
+        print(f"# WARNING: session confs differ ({', '.join(conf_diff)}); "
+              f"both trees run under the new tree's", file=sys.stderr)
     # One session, built by the NEW tree's factory (env-driven master,
     # same confs bench.py uses); both trees' queries run on it.
     spark = new.session.get_spark("andl_spark-abtrees")
@@ -115,16 +167,20 @@ def main() -> None:
     if missing:
         raise SystemExit(f"not in both trees: {missing}")
 
-    # Warm-up both trees once (JVM, parquet footers) outside timing.
-    for tree in (old, new):
-        tree.run(names[0], spark, sf_dir)
+    # Warm-up outside timing: every query once per tree (JVM, parquet
+    # footers, per-table handles), so no rep-1 sample pays cold costs.
+    for name in names:
+        for tree in (old, new):
+            tree.run(name, spark, sf_dir)
 
     samples: dict[str, dict[str, list[float]]] = {
         n: {"old": [], "new": []} for n in names}
     rows_seen: dict[str, dict[str, int]] = {n: {} for n in names}
     for rep in range(reps):
+        # alternate per query, flipping which tree goes first each rep
+        order = (old, new) if rep % 2 == 0 else (new, old)
         for name in names:
-            for tree in (old, new):  # strict alternation per query
+            for tree in order:
                 sec, nrows = tree.run(name, spark, sf_dir)
                 samples[name][tree.tag].append(sec)
                 rows_seen[name][tree.tag] = nrows
@@ -138,6 +194,9 @@ def main() -> None:
         "sf_dir": sf_dir,
         "cpus": os.environ.get("SPARK_GRAFT_CPUS", "*"),
         "reps": reps,
+        "old_confs": old.confs,
+        "new_confs": new.confs,
+        "conf_diff": conf_diff,
         "queries": {},
     }
     tot_old = tot_new = 0.0
